@@ -11,41 +11,22 @@ into the proximity analytics the reference's per-vehicle lag pipeline
 cannot express (its window partitions by vehicle; proximity is
 BETWEEN vehicles).
 
-Plan shape (the 2D sibling of the ``clicks_near_signup`` range join's
-1D block-explode): a naive radius theta-join is a per-bucket cross
-product — quadratic in pings per bucket, dead at 100 TB.  Instead:
-
-1. GRID: each ping is assigned one home cell on a fixed lat/lon grid
-   sized so that any two points within ``radius_m`` land in the same
-   or adjacent cells: cell height = ``radius_m`` meters of latitude
-   exactly; cell width uses the conservative ``MIN_COS_LAT`` bound so
-   the guarantee holds for any |lat| ≤ 60° without a per-row
-   transcendental (cos in the cell size would also be an
-   engine-dependent constant — the grid stays pure rational
-   arithmetic, so the same floats fall in the same cells everywhere).
-2. EXPLODE: the probe side replicates each ping to its HALF-PLANE
-   neighbor cells — self plus the 4 lexicographically-forward
-   neighbors (round 15; was the full 3×3) — the build side keeps home
-   cells only.  Every qualifying pair is found EXACTLY once: each
-   unordered pair of distinct adjacent cells has exactly one
-   representative offset in the forward half, and same-cell pairs ride
-   (0,0) with the strict key inequality — so no de-duplicating
-   exchange is ever needed (the containment rollup lesson), and the
-   probe shuffle carries 5/9 of the rows the full 3×3 did.
-3. EQUI-JOIN on (bucket, cell_y, cell_x) + exact haversine residual
-   filter on the ROUNDED distance (round 2 dp — the engine-wide
-   transcendental parity rule; the grid is a candidate generator, the
-   rounded haversine is the spec).
-4. One partial-aggregated rollup per (bucket, pair): ping-pair count
-   and min distance.
-
-100 TB shape: the only shuffle is the (bucket, cell) equi-join +
-the pair rollup; candidates per cell are bounded by physical vehicle
+Plan shape: a naive radius theta-join is a per-bucket cross product —
+quadratic in pings per bucket.  Instead each ping gets one home cell on
+a fixed lat/lon grid sized so that any two points within ``radius_m``
+land in the same or adjacent cells: cell height = ``radius_m`` meters of
+latitude exactly; cell width uses the conservative ``MIN_COS_LAT`` bound
+so the guarantee holds for any |lat| ≤ 60° without a per-row
+transcendental (the grid stays pure rational arithmetic, so the same
+floats fall in the same cells everywhere).  The (bucket, cell) pairing
+is ``operators/pairs.blocked_pairs`` with the cells as half-plane
+``near`` keys; the exact residual filter is the ROUNDED haversine
+(round 2 dp — the engine-wide transcendental parity rule; the grid is a
+candidate generator, the rounded haversine is the spec), and one
+partial-aggregated rollup per (bucket, pair) gives the ping-pair count
+and min distance.  Candidates per cell are bounded by physical vehicle
 density (a cell is ~radius² meters), so cost is linear in pings at
-fixed density.  Hot cells (depots, terminals) are the skew dial:
-AQE's skew-join split handles them at runtime — the join is
-merge-pinned only against mis-BROADCAST (both sides are corpus-
-scaled; the round-7 starved-driver rule), not against splitting.
+fixed density; hot cells (depots, terminals) are AQE skew-split work.
 """
 
 from __future__ import annotations
@@ -54,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_olho_vivo_spark.functions.geo import haversine_m
+from etl_olho_vivo_spark.operators.pairs import blocked_pairs
 
 M_PER_DEG_LAT = 111320.0  # meters per degree of latitude (spherical)
 MIN_COS_LAT = 0.5         # correctness bound: grid valid for |lat| <= 60 deg
@@ -92,46 +74,18 @@ def grid_project(
     )
 
 
-def neighbor_offsets():
-    """The probe-side explode payload — one literal array of (dy, dx)
-    structs, shared by batch and stream.
-
-    HALF-PLANE set (round 15): {(0,0), (0,1), (1,-1), (1,0), (1,1)} —
-    self plus the lexicographically-forward half of the 3×3
-    neighborhood.  For any unordered pair of distinct adjacent cells,
-    exactly ONE of (c2−c1) / (c1−c2) lies in the forward half, so each
-    cross-cell pair is generated exactly once (keys then reordered with
-    least/greatest); same-cell pairs ride (0,0) with the strict key
-    inequality.  vs the full 3×3 this shuffles 5/9 of the probe rows
-    and emits half the cross-cell join rows for the SAME result —
-    guide §2.3, shuffle fewer bytes."""
-    return F.array(*[
-        F.struct(F.lit(dy).alias("dy"), F.lit(dx).alias("dx"))
-        for dy, dx in ((0, 0), (0, 1), (1, -1), (1, 0), (1, 1))
-    ])
-
-
-def pair_orientation_filter():
-    """The exactly-once + no-self-pair predicate over half-plane join
-    rows: same-cell candidates (offset (0,0), flagged ``same``) keep
-    the strictly-ordered direction only — both directions emerge from
-    the join; cross-cell candidates emerge once and only need the
-    self-vehicle guard.  NULL keys never pair (every branch is a
-    NULL-propagating comparison), preserving the pinned NULL-ping
-    semantics."""
-    return F.when(
-        F.col("same"), F.col("ka") < F.col("kb")
-    ).otherwise(F.col("ka") != F.col("kb"))
-
-
-def pair_distance():
-    """round(haversine, 2) over the (la_a, lo_a, la_b, lo_b) pair
-    columns — the residual-filter spec, shared by batch and stream."""
-    return F.round(
+def within_radius(radius_m: float):
+    """The pair verify shared by batch and stream: ``dist_m`` =
+    round(haversine, 2) over the carried (la, lo) columns, kept when
+    within ``radius_m``."""
+    dist = F.round(
         haversine_m(
             F.col("la_a"), F.col("lo_a"), F.col("la_b"), F.col("lo_b")
         ),
         2,
+    )
+    return lambda p: p.withColumn("dist_m", dist).filter(
+        F.col("dist_m") <= radius_m
     )
 
 
@@ -157,48 +111,16 @@ def colocation_pairs(
     propagates past the threshold — which is the semantics a missing
     position deserves, and what a naive all-pairs SQL oracle computes
     too (NULL <= R is not true in either engine)."""
-    base = grid_project(
-        pos, radius_m, key=key, lat=lat, lon=lon, ts=ts,
-        bucket_s=bucket_s,
+    pairs = blocked_pairs(
+        grid_project(
+            pos, radius_m, key=key, lat=lat, lon=lon, ts=ts,
+            bucket_s=bucket_s,
+        ),
+        id="k", pair=("vehicle_a", "vehicle_b"), keys=("bucket",),
+        near=("cy", "cx"), carry=("la", "lo"),
+        verify=within_radius(radius_m),
     )
-    # probe side: self + forward-half neighbor cells (the half-plane
-    # explode — see neighbor_offsets).  explode of a 5-element literal
-    # array of structs — no Python, one Generate node
-    offsets = neighbor_offsets()
-    probe = base.select(
-        F.col("k").alias("ka"),
-        F.col("la").alias("la_a"), F.col("lo").alias("lo_a"),
-        "bucket",
-        F.explode(offsets).alias("o"),
-        "cy", "cx",
-    ).select(
-        "ka", "la_a", "lo_a", "bucket",
-        (F.col("cy") + F.col("o.dy")).alias("cy"),
-        (F.col("cx") + F.col("o.dx")).alias("cx"),
-        ((F.col("o.dy") == 0) & (F.col("o.dx") == 0)).alias("same"),
-    )
-    build = base.select(
-        F.col("k").alias("kb"),
-        F.col("la").alias("la_b"), F.col("lo").alias("lo_b"),
-        "bucket", "cy", "cx",
-    )
-    dist = pair_distance()
-    return (
-        probe.hint("merge")
-        .join(build, ["bucket", "cy", "cx"])
-        .filter(pair_orientation_filter())
-        .withColumn("dist_m", dist)
-        .filter(F.col("dist_m") <= radius_m)
-        # cross-cell rows arrive in grid order, not key order — restore
-        # the unordered-pair orientation on the keys (distance is
-        # symmetric, so dist_m needs no swap)
-        .groupBy(
-            "bucket",
-            F.least("ka", "kb").alias("vehicle_a"),
-            F.greatest("ka", "kb").alias("vehicle_b"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_close"),
-            F.min("dist_m").alias("min_dist_m"),
-        )
+    return pairs.groupBy("bucket", "vehicle_a", "vehicle_b").agg(
+        F.count(F.lit(1)).cast("long").alias("n_close"),
+        F.min("dist_m").alias("min_dist_m"),
     )

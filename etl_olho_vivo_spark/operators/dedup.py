@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 if TYPE_CHECKING:
@@ -31,6 +31,7 @@ from etl_olho_vivo_spark.functions.hashing import (
     shingle3_expr,
     spark_token_hash,
 )
+from etl_olho_vivo_spark.operators.pairs import blocked_pairs
 
 NUM_HASHES = 8
 ROWS_PER_BAND = 2
@@ -446,41 +447,24 @@ def minhash_signature(
     return with_shingles(pre, text).withColumn(out, F.expr(sig))
 
 
-def lsh_bands(df: DataFrame, sig_col: str = "minhash") -> DataFrame:
-    """Explode the signature into slim (doc_id, band, band_sig) key rows.
-
-    Deliberately does NOT carry the shingle array: the band self-join
-    should shuffle ~40-byte key rows, not text-sized shingle payloads.
-    """
-    bands = (
+def _lsh_bands(sig_col: str = "minhash") -> Column:
+    """The signature's (band, band_sig) keys as an array of structs.
+    Deliberately slim: the band join shuffles ~40-byte key rows, and the
+    shingle arrays are attached only to the de-duplicated candidates."""
+    return F.expr(
         f"transform(sequence(0, {NUM_BANDS - 1}), b -> "
         f"struct(b AS band, array_join(transform("
         f"slice({sig_col}, b * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND}), "
         f"x -> CAST(x AS STRING)), '_') AS band_sig))"
     )
-    return df.select(
-        "doc_id", F.explode(F.expr(bands)).alias("bk")
-    ).select("doc_id", "bk.band", "bk.band_sig")
 
 
-def candidate_pairs(banded: DataFrame) -> DataFrame:
-    """Doc-id pairs sharing any (band, band_sig) key — the LSH candidates.
-
-    merge (sort-merge) pinned: both sides are corpus-sized band-key
-    relations.  Without a hint AQE's runtime size estimate can pick a
-    broadcast join (corpus-scaled broadcast = the plan that dies first
-    at scale), and shuffle_hash builds a per-partition in-memory map
-    that cannot spill — the starved-JVM probe showed both OOM at 30×
-    density while the sort-merge plan spills and completes.
-    """
-    a = banded.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
-    b = banded.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
-    return (
-        a.hint("merge")
-        .join(b, ["band", "band_sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
+def _jaccard_at_least(threshold: float):
+    """Exact shingle-set Jaccard over the attached ``sh_a``/``sh_b``."""
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return lambda p: p.withColumn("jaccard", inter / union).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -518,23 +502,9 @@ def near_duplicates(
         sig = minhash_signature(df, text).select("doc_id", "sh", "minhash")
         if persist:
             sig = _persist(sig, caches)
-    pairs = candidate_pairs(lsh_bands(sig))
-    sh_a = sig.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sh_b = sig.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    # verify joins pinned merge: `pairs` scales with candidates and the
-    # sh_* sides (shingle arrays) with the corpus — neither may be
-    # broadcast, and a shuffled-hash build map of shingle arrays is the
-    # first thing to OOM under memory pressure; SMJ spills instead
-    return (
-        pairs.hint("merge")
-        .join(sh_a, "doc_a")
-        .hint("merge")
-        .join(sh_b, "doc_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+    return blocked_pairs(
+        sig, id="doc_id", pair=("doc_a", "doc_b"), bands=_lsh_bands(),
+        attach=("sh",), verify=_jaccard_at_least(threshold),
     )
 
 
@@ -851,48 +821,9 @@ def incremental_near_duplicates(
         )
         if persist:
             new_sig = _persist(new_sig, caches)
-    new_bands = lsh_bands(new_sig).withColumnRenamed("doc_id", "doc_new")
-    old_bands = lsh_bands(store).withColumnRenamed("doc_id", "doc_old")
-    # deliberately UNHINTED — the one pair join whose sides are
-    # asymmetric: old_bands is CORPUS-sized but new_bands scales with
-    # the micro-batch.  A merge pin here would shuffle+sort the whole
-    # store on EVERY batch (cost ∝ corpus — the exact contract this
-    # function exists to avoid); letting AQE decide keeps cost ∝ batch:
-    # its broadcast picks use ACTUAL runtime bytes against the
-    # threshold (bounded by construction, unlike estimate-based static
-    # broadcasts), so a normal batch broadcasts its slim band keys and
-    # the store is only scanned, while a degenerate corpus-sized
-    # catch-up batch falls back to a spillable sort-merge join.
-    pairs = (
-        new_bands.join(old_bands, ["band", "band_sig"])
-        # identity guard: doc ids are globally unique, so doc_new ==
-        # doc_old can only mean the store holds the batch's OWN earlier
-        # write (at-least-once replay — possibly already folded into a
-        # compacted base partition, where partition-level exclusion
-        # cannot see it).  Without this a replayed doc self-matches at
-        # jaccard 1.0 and deletes itself from the corpus.
-        .filter(F.col("doc_new") != F.col("doc_old"))
-        .select("doc_new", "doc_old")
-        .dropDuplicates(["doc_new", "doc_old"])
-    )
-    sh_new = new_sig.select(
-        F.col("doc_id").alias("doc_new"), F.col("sh").alias("sh_a")
-    )
-    sh_old = store.select(
-        F.col("doc_id").alias("doc_old"), F.col("sh").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        # unhinted for the same reason as the band join above: pairs and
-        # sh_new are batch/candidate-scaled, sh_old is corpus-scaled —
-        # AQE's byte-bounded broadcast of the small sides keeps the
-        # store un-shuffled on the normal path
-        pairs.join(sh_new, "doc_new")
-        .join(sh_old, "doc_old")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_new", "doc_old", "jaccard")
+    return blocked_pairs(
+        new_sig, store, id="doc_id", pair=("doc_new", "doc_old"),
+        bands=_lsh_bands(), attach=("sh",), verify=_jaccard_at_least(threshold),
     )
 
 
@@ -958,30 +889,28 @@ def _hamming_validate(bits: int, max_hamming: int, n_bands: int) -> None:
         raise ValueError(f"bits={bits} not divisible by n_bands={n_bands}")
 
 
-def _hamming_band_keys(sims: DataFrame, bits: int, n_bands: int) -> DataFrame:
-    """(doc_id, __h__, band, seg) keys for a (doc_id, __h__) frame.
-    Segment extraction uses ``shiftrightunsigned`` so full-width 64-bit
-    hashes (stored as SIGNED longs, possibly negative) band correctly.
-
-    The full hash rides along (round 15): the verify payload is ONE
-    64-bit value, so carrying it through the band join costs 8 bytes
-    per key row and removes the two merge join-backs (plus their
-    sorts/exchanges) that used to re-attach hashes to candidate pairs
-    — the §8 "shuffle a few bytes of metadata" trade, measured as the
-    dominant cost of the pairing stage."""
+def _hamming_bands(hash_col: str, bits: int, n_bands: int) -> Column:
+    """The hash's ``n_bands`` contiguous (band, seg) segments as an array
+    of structs.  ``shiftrightunsigned`` bands full-width 64-bit hashes
+    (stored as SIGNED longs, possibly negative) correctly."""
     w = bits // n_bands
     # full-width segment (n_bands=1, bits=64): the mask 2^64-1 does not
     # fit a BIGINT literal (Spark parses it as DECIMAL and `&` rejects
     # it) — but as a SIGNED 64-bit value all-ones IS -1, and x & -1 = x
     mask = (2 ** w - 1) if w < 64 else -1
-    seg = (
+    return F.expr(
         f"transform(sequence(0, {n_bands - 1}), b -> "
-        f"struct(b AS band, shiftrightunsigned(__h__, b * {w}) "
+        f"struct(b AS band, shiftrightunsigned(`{hash_col}`, b * {w}) "
         f"& {mask} AS seg))"
     )
-    return sims.select(
-        "doc_id", "__h__", F.explode(F.expr(seg)).alias("bk")
-    ).select("doc_id", "__h__", "bk.band", "bk.seg")
+
+
+def _hamming_within(hash_col: str, max_hamming: int):
+    """Exact verify over the carried hashes: ``bit_count(a XOR b)``."""
+    dist = F.bit_count(F.col(f"{hash_col}_a").bitwiseXOR(F.col(f"{hash_col}_b")))
+    return lambda p: p.withColumn("hamming", dist).filter(
+        F.col("hamming") <= max_hamming
+    )
 
 
 def hamming_near_dups(
@@ -1000,37 +929,13 @@ def hamming_near_dups(
     n_bands − 1 agrees on at least one segment — then verify exactly
     with ``bit_count(a XOR b)``.  Returns (doc_a, doc_b, hamming).
 
-    Plan shape (round 15): the band keys CARRY the 64-bit hash, so the
-    band join's output is verifiable in place — bit_count is one codegen
-    instruction — and the pair de-dup (a pair agreeing on k segments
-    emerges k times) runs AFTER the Hamming filter, over the verified
-    pairs (a subset of the candidates), instead of before two hash
-    join-backs.  vs the round-14 shape this removes two sort-merge
-    joins and their exchanges (7 exchanges → 3 for the simhash row)
-    and shrinks the de-dup exchange from candidate volume to verified
-    volume, for +8 bytes per band-key row."""
+    The band keys carry the 64-bit hash, so candidates verify in place
+    and the pair de-dup runs over verified pairs only."""
     _hamming_validate(bits, max_hamming, n_bands)
-    sims = hashes.select(
-        F.col(id_col).alias("doc_id"), F.col(hash_col).alias("__h__")
-    )
-    banded = _hamming_band_keys(sims, bits, n_bands)
-    a = banded.select(
-        F.col("doc_id").alias("doc_a"), F.col("__h__").alias("ha"),
-        "band", "seg",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("doc_b"), F.col("__h__").alias("hb"),
-        "band", "seg",
-    )
-    hamming = F.bit_count(F.expr("ha ^ hb"))
-    return (
-        a.hint("merge")
-        .join(b, ["band", "seg"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-        .dropDuplicates(["doc_a", "doc_b"])
+    return blocked_pairs(
+        hashes, id=id_col, pair=("doc_a", "doc_b"),
+        bands=_hamming_bands(hash_col, bits, n_bands), carry=(hash_col,),
+        verify=_hamming_within(hash_col, max_hamming),
     )
 
 
@@ -1053,59 +958,19 @@ def hamming_near_dups_incremental(
     max_hamming); resolve drops on the caller's policy (typically:
     drop doc_new — the stored row was admitted first).
 
-    Scale shape: the band join is deliberately UNHINTED for the same
-    reason as the MinHash incremental pairing — the store side is
-    CORPUS-sized but the batch side scales with the micro-batch, so
-    AQE's byte-bounded runtime broadcast of the batch band keys keeps
-    cost ∝ batch, while a degenerate corpus-sized catch-up batch falls
-    back to a spillable sort-merge join.  The ``doc_new != doc_old``
-    identity guard keeps an at-least-once replay (own earlier write
-    already folded into a compacted store base) from matching itself.
-
-    ``dedup_pairs=False`` (round 14) skips the (doc_new, doc_old)
-    dropDuplicates — a whole extra exchange+aggregate — when the
-    CALLER already de-duplicates downstream at its own granularity: a
-    pair agreeing on k bands emerges k times, each copy verifies to
-    the same hamming, and ``media_containment_pairs``'s rollup
-    collapses them at the (probe doc, probe frame, index doc) triple
-    anyway.  Admit loops keep the default: their consumers treat each
-    pair row as one near-dup fact.
-
-    Plan shape (round 15, same as ``hamming_near_dups``): the band
-    keys carry the hash, the band join's output verifies in place, and
-    the optional pair de-dup runs over VERIFIED pairs — the two
-    join-backs that re-attached hashes to candidates are gone (they
-    re-shuffled the corpus-sized store per micro-batch when AQE
-    declined the broadcast)."""
+    ``dedup_pairs=False`` skips the (doc_new, doc_old) de-dup — a whole
+    extra exchange+aggregate — when the CALLER already de-duplicates
+    downstream at its own granularity: a pair agreeing on k bands
+    emerges k times, each copy verifying to the same hamming, and
+    ``media_containment_pairs``'s rollup collapses them anyway.  Admit
+    loops keep the default: their consumers treat each pair row as one
+    near-dup fact."""
     _hamming_validate(bits, max_hamming, n_bands)
-    new_sims = new_hashes.select(
-        F.col(id_col).alias("doc_id"), F.col(hash_col).alias("__h__")
+    return blocked_pairs(
+        new_hashes, store, id=id_col, pair=("doc_new", "doc_old"),
+        bands=_hamming_bands(hash_col, bits, n_bands), carry=(hash_col,),
+        verify=_hamming_within(hash_col, max_hamming), dedup_pairs=dedup_pairs,
     )
-    old_sims = store.select(
-        F.col(id_col).alias("doc_id"), F.col(hash_col).alias("__h__")
-    )
-    new_b = _hamming_band_keys(new_sims, bits, n_bands).select(
-        F.col("doc_id").alias("doc_new"), F.col("__h__").alias("ha"),
-        "band", "seg",
-    )
-    old_b = _hamming_band_keys(old_sims, bits, n_bands).select(
-        F.col("doc_id").alias("doc_old"), F.col("__h__").alias("hb"),
-        "band", "seg",
-    )
-    out = (
-        # unhinted: new_b is batch-scaled, old_b corpus-scaled — AQE's
-        # byte-bounded runtime broadcast ships the batch band keys,
-        # while a degenerate corpus-sized catch-up batch falls back to
-        # a spillable sort-merge join
-        new_b.join(old_b, ["band", "seg"])
-        .filter(F.col("doc_new") != F.col("doc_old"))
-        .withColumn("hamming", F.bit_count(F.expr("ha ^ hb")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_new", "doc_old", "hamming")
-    )
-    if dedup_pairs:
-        out = out.dropDuplicates(["doc_new", "doc_old"])
-    return out
 
 
 def simhash_expr(col: str, bits: int) -> str:

@@ -28,6 +28,7 @@ from etl_olho_vivo_spark.operators import (
     similarity,
     textops,
 )
+from etl_olho_vivo_spark.operators.pairs import blocked_pairs
 from etl_olho_vivo_spark.registry import register
 from etl_olho_vivo_spark.sources.tables import read_table
 
@@ -981,56 +982,28 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).select("doc_id", "source", "n_chars", F.expr(bg).alias("bg"))
     )
-    # Equi-join on (source, 20-char length bucket) with neighbor-bucket
-    # expansion on one side: |Δn_chars| ≤ 20 implies bucket distance ≤ 1,
-    # so exploding side A to {b-1, b, b+1} finds every qualifying pair
-    # exactly once (each pair meets at the single key k = B's bucket).
-    # Joining only on `source` (few distinct values) would hash the whole
-    # corpus onto a handful of reducers — this keys the shuffle on a
-    # fine-grained uniform key instead, the shape that survives 100 TB.
-    bucket = F.floor(F.col("n_chars") / 20)
-    a = t.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("source"),
-        F.col("n_chars").alias("nc_a"),
-        F.col("bg").alias("bg_a"),
-        F.explode(F.array(bucket - 1, bucket, bucket + 1)).alias("bucket"),
-    )
-    b = t.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("source"),
-        F.col("n_chars").alias("nc_b"),
-        F.col("bg").alias("bg_b"),
-        bucket.alias("bucket"),
-    )
+    # blocks: (source, 20-char length bucket) with neighbour buckets —
+    # |Δn_chars| ≤ 20 implies bucket distance ≤ 1.  Joining on `source`
+    # alone (few distinct values) would hash the corpus onto a handful
+    # of reducers.
     inter = F.size(F.array_intersect("bg_a", "bg_b"))
-    union = F.size("bg_a") + F.size("bg_b") - inter
+    na_nb = F.size("bg_a") + F.size("bg_b")
     # threshold test in integer form: J = i/(na+nb-i) >= 0.3  ⇔
     # 13·i >= 3·(na+nb)  — evaluates the array_intersect ONCE per pair
     # (a filter on the jaccard column would be pushed below the projection
-    # with the intersect expression substituted into it, recomputing the
-    # intersection 2-3× per joined row)
-    na_nb = F.size("bg_a") + F.size("bg_b")
-    keep = (F.lit(13) * inter >= F.lit(3) * na_nb) & (na_nb > 0)
-    # Pin the exchange: the pair stage shuffles few bytes but does
-    # O(block²) array-intersect work per partition, so AQE's size-based
-    # coalescing would collapse it to one task (same rationale as
-    # registry_ingest.q_doc_editdist_near_dup); merge (sort-merge) keeps
-    # BOTH failure modes off the table at real scale — the
-    # broadcast-of-the-corpus plan and the shuffled-hash build map,
-    # which holds a whole (source, bucket) block in memory per task and
-    # cannot spill (the starved-JVM probe showed hash builds OOM at 30×
-    # block density while SMJ spills and completes).
-    a = a.repartition(par, "source", "bucket")
-    return (
-        a.hint("merge").join(b, ["source", "bucket"])
-        .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            & (F.abs(F.col("nc_a") - F.col("nc_b")) <= 20)
-        )
-        .filter(keep)
-        .select("doc_a", "doc_b", (inter / union).alias("jaccard"))
+    # with the intersect expression substituted into it)
+    keep = (
+        (F.abs(F.col("n_chars_a") - F.col("n_chars_b")) <= 20)
+        & (F.lit(13) * inter >= F.lit(3) * na_nb) & (na_nb > 0)
     )
+    return blocked_pairs(
+        t.withColumn("bucket", F.floor(F.col("n_chars") / 20)),
+        id="doc_id", pair=("doc_a", "doc_b"), keys=("source",),
+        near=("bucket",), carry=("n_chars", "bg"), pin=True,
+        verify=lambda p: p.filter(keep).withColumn(
+            "jaccard", inter / (na_nb - inter)
+        ),
+    ).select("doc_a", "doc_b", "jaccard")
 
 
 _D_GRAM5 = ngram_hash_expr([f"wh[i+{j + 1}]" for j in range(5)])

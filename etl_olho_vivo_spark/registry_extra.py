@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_olho_vivo_spark.operators.asof import asof_join
+from etl_olho_vivo_spark.operators.pairs import blocked_pairs
 from etl_olho_vivo_spark.operators.similarity import ivf_assign
 from etl_olho_vivo_spark.registry import register
 from etl_olho_vivo_spark.sources.tables import read_table
@@ -223,7 +224,7 @@ SELECT vec_a, vec_b, cell_id, cos_sim FROM p WHERE cos_sim >= 0.4
 def q_embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 16 cells is the ORACLE PIN (the DuckDB SQL above hardcodes the
     # same assignment); the operator's own DEFAULT (n_cells=None) is
-    # density-adaptive since round 15 — n_cells ∝ corpus via
+    # density-adaptive — n_cells ∝ corpus via
     # DEFAULT_CELL_OCCUPANCY — and the bench scale tier measures that
     # default next to this fixed-grid row
     return embedding_near_dup_frame(spark, sf_dir, n_cells=16)
@@ -239,10 +240,9 @@ def embedding_near_dup_frame(
 
     emb = read_table(spark, sf_dir, "embeddings")
     if n_cells is None:
-        # density-adaptive DEFAULT (round 15, r14 verdict #4): derive
-        # the grid from the corpus so per-cell density — and the
-        # within-cell quadratic stage's cost — stays constant as the
-        # corpus grows.  The count is one footer-metadata job on the
+        # density-adaptive DEFAULT: derive the grid from the corpus so
+        # per-cell density — and the within-cell quadratic stage's
+        # cost — stays constant as the corpus grows.  The count is one footer-metadata job on the
         # scan this query reads anyway; callers pinning a grid (the
         # oracle row's 16, an index's stamped count) pass it explicitly.
         import math
@@ -265,36 +265,20 @@ def embedding_near_dup_frame(
             "nrm", F.sqrt(F.expr(f"CAST({norm} AS DOUBLE)"))
         )
     )
-    # exchange pinned by NUMBER (the editdist rule, round 15): the
-    # within-cell pair stage does O(pairs·d) array work over slim
-    # shuffled bytes, and AQE's byte-based coalescing would collapse
-    # the compute-bound join to one task (measured 1.22 s → 0.63 s at
-    # sf0.1 with the pin; byte counts misjudge compute density)
-    par = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    x = assigned.select(
-        F.col("vec_id").alias("vec_a"), F.col("cell_id"),
-        F.col("qv").alias("qa"), F.col("nrm").alias("na"),
-    ).repartition(par, "cell_id")
-    y = assigned.select(
-        F.col("vec_id").alias("vec_b"), F.col("cell_id"),
-        F.col("qv").alias("qb"), F.col("nrm").alias("nb"),
+    dot = (
+        "aggregate(zip_with(qv_a, qv_b, (x, y) -> x * y), "
+        "CAST(0 AS BIGINT), (s, v) -> s + v)"
     )
-    dot = "aggregate(zip_with(qa, qb, (x, y) -> x * y), CAST(0 AS BIGINT), (s, v) -> s + v)"
     cos = F.round(
-        F.expr(f"CAST({dot} AS DOUBLE)") / (F.col("na") * F.col("nb")), 6
+        F.expr(f"CAST({dot} AS DOUBLE)") / (F.col("nrm_a") * F.col("nrm_b")),
+        6,
     )
-    # merge (sort-merge) pinned: both self-join sides are the
-    # corpus-sized assignment (with vector payloads) — a runtime
-    # estimate that broadcasts one side OOMs first at scale, and a
-    # shuffled-hash build map of vector arrays OOMs under pressure
-    # where SMJ spills (starved-probe evidence, BASELINE.md)
-    return (
-        x.hint("merge")
-        .join(y, ["cell_id"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cos_sim", cos)
-        .filter(F.col("cos_sim") >= 0.4)
-        .select("vec_a", "vec_b", "cell_id", "cos_sim")
+    return blocked_pairs(
+        assigned, id="vec_id", pair=("vec_a", "vec_b"), keys=("cell_id",),
+        carry=("qv", "nrm"), pin=True,
+        verify=lambda p: p.withColumn("cos_sim", cos).filter(
+            F.col("cos_sim") >= 0.4
+        ),
     )
 
 

@@ -38,6 +38,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_olho_vivo_spark.operators.pairs import blocked_pairs
 from etl_olho_vivo_spark.registry import register
 from etl_olho_vivo_spark.sources.events_adapter import POSICOES_FROM_EVENTS_SQL
 from etl_olho_vivo_spark.sources.tables import read_table
@@ -204,7 +205,7 @@ FROM documents a JOIN documents b
 WHERE levenshtein(a.text, b.text) <= {_EDITDIST_T}
 """,
     doc="Blocked edit-distance near-dup with the LENGTH-BAND escape "
-    "and the EXACT-DUP COLLAPSE (round 10) — the oracle is the naive "
+    "and the EXACT-DUP COLLAPSE — the oracle is the naive "
     "quadratic join, so the value-hash proves both are LOSSLESS.  "
     "Stage 1 collapses identical texts: groupBy (lang, source, "
     "md5(text)) keeps one representative (gid = min doc_id) per "
@@ -217,32 +218,24 @@ WHERE levenshtein(a.text, b.text) <= {_EDITDIST_T}
     "within (lang, source, length-band ±1): Levenshtein >= "
     "|len(a)-len(b)|, and with band width T+1 any pair two bands "
     "apart has a length gap > T, so it can never reach the threshold; "
-    "pairs land exactly once because only the probe side replicates "
-    "(to band-1/band/band+1) and gid_a < gid_b orders each unordered "
-    "pair once.  Stage 3 expands verified representative pairs back "
+    "pairs land exactly once by the half-plane band rule (README, "
+    "Scale design).  Stage 3 expands verified representative pairs back "
     "to member pairs with slim merge joins (least/greatest restores "
     "the doc_a < doc_b orientation — ids interleave across groups) "
     "and unions within-group pairs at distance 0 (levenshtein(t,t) = "
     "0): output cardinality is the answer's own size, never DP-bound.  "
-    "Three plan decisions are load-bearing: (1) merge, not broadcast "
-    "(shipping the whole corpus to every executor cannot happen at "
-    "100 TB) and not shuffled-hash (its per-task build map holds a "
-    "whole block in memory and cannot spill — the starved-JVM probe "
-    "OOMs hash builds at 30× density while SMJ completes); (2) "
-    "repartition(n, block) pins the exchange so AQE's size-based "
-    "coalescing cannot collapse a compute-bound stage (the shuffled "
-    "rows are tiny but each output partition does O(len·T) DP work — "
-    "byte counts misjudge it); (3) the DP itself is threshold-banded "
-    "(levenshtein's 3-arg form, O(len·T) not O(len²)) and runs only "
-    "after the |len diff| <= T lower-bound prune.  Completes "
-    "the dedup family: exact / MinHash / SimHash / n-gram Jaccard / "
+    "The pairing is operators/pairs.blocked_pairs (merge join, "
+    "exchange pinned by number — each output partition does O(len·T) "
+    "DP work that byte counts misjudge); the DP itself is "
+    "threshold-banded (levenshtein's 3-arg form, O(len·T) not O(len²)) "
+    "and runs only after the |len diff| <= T lower-bound prune.  "
+    "Completes the dedup family: exact / MinHash / SimHash / n-gram Jaccard / "
     "embedding-cosine / edit-distance.",
 )
 def q_doc_editdist_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_olho_vivo_spark.caching import SESSION_BAG
 
     d = read_table(spark, sf_dir, "documents")
-    par = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     width = _EDITDIST_T + 1
 
     # stage 1: exact-dup collapse (fingerprint identity, skew-safe
@@ -268,84 +261,34 @@ def q_doc_editdist_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("gid", "doc_id")
     )
 
-    # stage 2: banded DP over distinct-text representatives only.
-    # Round 15 — two measured fixes to WHERE the DP runs:
-    # (1) the cheap predicates (pair orientation, Levenshtein length
-    #     lower bound) live in the JOIN CONDITION, written BEFORE any
-    #     DP expression exists: the round-14 shape let Catalyst fold
-    #     the pushed dist>=0 filter into the join condition AHEAD of
-    #     gid_a < gid_b, so every wrongly-ordered candidate (half of
-    #     them, plus self pairs) paid the O(len·T) DP first and was
-    #     discarded after;
-    # (2) levenshtein evaluates ONCE, in a projection above the join,
-    #     wrapped in explode_outer(filter(array(·))) — a plain
-    #     .filter(dist >= 0) on the alias gets pushed below the project
-    #     with the expression SUBSTITUTED (the same mechanism as the
-    #     guide's UDF-duplication case), re-running the DP in the join
-    #     condition and again in the projection.  The outer generator
-    #     is the documented pushdown barrier (InferFiltersFromGenerate
-    #     skips outer generates), and the residual NULL-drop filters on
-    #     the GENERATED attribute, which cannot be pushed below it.
-    # Round 16 — HALF-PLANE band explode (the colocate r15 lesson in
-    # 1D, guide §2.3 shuffle fewer bytes / §3.3 explode multiplies the
-    # join): the old shape replicated the build side's TEXT payload to
-    # all three bands {b-1, b, b+1} and generated every cross-band
-    # pair twice (once per direction, half killed by gid_a < gid_b in
-    # the join condition).  Now the PROBE side explodes to the forward
-    # half {b, b+1} only: a same-band pair rides offset 0 with the
-    # strict gid order, and a cross-band pair (bands differ by exactly
-    # 1) emerges exactly once — via its lower-band member probing
-    # b + 1 — in grid order, reordered to gid order after the join
-    # (levenshtein is symmetric, so the distance needs no swap).  Text
-    # bytes entering the exchange drop from 4 corpus-copies (1 + the
-    # 3-way explode) to 3, and the join evaluates half the cross-band
-    # candidates for the same emitted pair set.
-    band = (F.length("text") / width).cast("int")
-    a = groups.select(
-        F.col("lang"), F.col("source"),
-        F.explode(F.array(band, band + 1)).alias("band"),
-        band.alias("home_a"),
-        F.col("gid").alias("gid_a"),
-        F.length("text").alias("la"), F.col("text").alias("ta"),
-    ).repartition(par, "lang", "source", "band").alias("A")
-    b = groups.select(
-        F.col("lang").alias("lang_b"), F.col("source").alias("source_b"),
-        band.alias("band_b"),
-        F.col("gid").alias("gid_b"),
-        F.length("text").alias("lb"), F.col("text").alias("tb"),
-    ).alias("B")
-    same = F.col("A.home_a") == F.col("B.band_b")
-    cond = (
-        (F.col("A.lang") == F.col("B.lang_b"))
-        & (F.col("A.source") == F.col("B.source_b"))
-        & (F.col("A.band") == F.col("B.band_b"))
-        # exactly-once orientation: same-band pairs emerge in both
-        # directions (both members probe offset 0) — keep the ordered
-        # one; cross-band pairs emerge once and keep any order
-        & F.when(same, F.col("A.gid_a") < F.col("B.gid_b")).otherwise(
-            F.lit(True)
-        )
-        # Levenshtein lower bound: prune before any DP cell is touched
-        & (F.abs(F.col("A.la") - F.col("B.lb")) <= _EDITDIST_T)
-    )
-    dist = F.levenshtein("ta", "tb", _EDITDIST_T)
-    rep_pairs = (
-        a.hint("merge")
-        .join(b, on=cond)
-        .select(
-            # cross-band rows arrive in band order — restore the
-            # gid_a < gid_b orientation (distance is symmetric)
-            F.least("gid_a", "gid_b").alias("gid_a"),
-            F.greatest("gid_a", "gid_b").alias("gid_b"),
-            # 3-arg levenshtein marks > T as -1; the 1-element-array
-            # filter keeps qualifying distances, explode_outer turns
-            # the empty array into a NULL row dropped just below
-            F.explode_outer(
-                F.filter(F.array(dist), lambda x: x >= 0)
-            ).alias("lev_dist"),
-        )
-        .filter(F.col("lev_dist").isNotNull())
-    )
+    # stage 2: banded DP over distinct-text representatives only.  The
+    # cheap length lower bound is a plain filter, so it joins the pair
+    # orientation in the join condition; levenshtein evaluates ONCE,
+    # above the join, wrapped in explode_outer(filter(array(·))) — a
+    # .filter(dist >= 0) on the alias would be pushed below the project
+    # with the DP SUBSTITUTED into the join condition.  The outer
+    # generator is the pushdown barrier (InferFiltersFromGenerate skips
+    # outer generates), and the NULL-drop filters the GENERATED
+    # attribute, which cannot move below it.  3-arg levenshtein marks
+    # distances > T as -1.
+    dp = F.explode_outer(F.filter(
+        F.array(F.levenshtein("text_a", "text_b", _EDITDIST_T)),
+        lambda x: x >= 0,
+    ))
+    rep_pairs = blocked_pairs(
+        groups.select(
+            "lang", "source", "gid", "text",
+            F.length("text").alias("len"),
+            (F.length("text") / width).cast("int").alias("band"),
+        ),
+        id="gid", pair=("gid_a", "gid_b"), keys=("lang", "source"),
+        near=("band",), carry=("len", "text"), pin=True,
+        verify=lambda p: p.filter(
+            F.abs(F.col("len_a") - F.col("len_b")) <= _EDITDIST_T
+        ).select("*", dp.alias("lev_dist")).filter(
+            F.col("lev_dist").isNotNull()
+        ),
+    ).select("gid_a", "gid_b", "lev_dist")
 
     # stage 3: expand verified representative pairs back to member
     # pairs.  Within-group pairs ride the SAME expansion as the
@@ -358,8 +301,8 @@ def q_doc_editdist_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # singleton's diagonal row joins to its one member on both sides
     # and the (da < db) orientation filter drops it.  In a mostly-
     # singleton corpus the filter removes almost the whole diagonal
-    # leg from the two expansion joins (round 15; n_members is free in
-    # the stage-1 aggregate).
+    # leg from the two expansion joins (n_members is free in the
+    # stage-1 aggregate).
     diag = groups.filter(F.col("n_members") >= 2).select(
         F.col("gid").alias("gid_a"),
         F.col("gid").alias("gid_b"),

@@ -173,16 +173,15 @@ def stream_colocation_pairs(
     with the batch rollup is by construction).
 
     Mechanics: both branches carry the event-time watermark; the join
-    keys are (event-time window, cell_y, cell_x) — window EQUALITY is
-    one of the two state-cleanup conditions Spark's stream-stream
-    inner join accepts (the other being a time-range predicate), so
-    each side's join state is dropped once the watermark passes the
-    window, bounding state by (watermark span × ping rate).  The
-    probe branch explodes to its half-plane neighbor cells; the build
-    branch keeps home cells; the shared orientation filter plus the
-    least/greatest key reorder makes each qualifying ping pair appear
-    exactly once (the batch operator's exactly-once argument,
-    unchanged).  Append-mode safe: each matched pair is
+    keys are (event-time window, bucket, cell_y, cell_x) — window
+    EQUALITY is one of the two state-cleanup conditions Spark's
+    stream-stream inner join accepts (the other being a time-range
+    predicate), so each side's join state is dropped once the
+    watermark passes the window, bounding state by (watermark span ×
+    ping rate).  The
+    pairing itself is ``operators/pairs.blocked_pairs`` — the batch
+    operator's half-plane cells and exactly-once orientation, unhinted
+    on streaming frames.  Append-mode safe: each matched pair is
     emitted once, no aggregation state — the per-bucket
     (n_close, min_dist) rollup is a BATCH query over the sink
     (chaining the aggregation here would stack a second stateful
@@ -191,49 +190,21 @@ def stream_colocation_pairs(
     Late data: pings later than ``watermark`` are dropped by the join
     state cleanup on BOTH sides — the standard inner-join watermark
     contract; size the watermark to the feed's real disorder."""
-    e = with_event_time(pos, watermark)
     from etl_olho_vivo_spark.operators.colocate import (
         grid_project,
-        neighbor_offsets,
-        pair_distance,
-        pair_orientation_filter,
+        within_radius,
     )
+    from etl_olho_vivo_spark.operators.pairs import blocked_pairs
 
-    base = grid_project(e, radius_m, bucket_s=bucket_s,
-                        extra=("event_time",))
-    win = F.window("event_time", f"{bucket_s} seconds")
-    # half-plane probe explode + orientation filter + least/greatest
-    # key reorder — the batch operator's round-15 shape, one shared
-    # definition (see colocate.neighbor_offsets)
-    probe = base.select(
-        F.col("k").alias("ka"),
-        F.col("la").alias("la_a"), F.col("lo").alias("lo_a"),
-        "bucket", win.alias("w"),
-        F.explode(neighbor_offsets()).alias("o"),
-        "cy", "cx",
-    ).select(
-        "ka", "la_a", "lo_a", "bucket", "w",
-        (F.col("cy") + F.col("o.dy")).alias("cy"),
-        (F.col("cx") + F.col("o.dx")).alias("cx"),
-        ((F.col("o.dy") == 0) & (F.col("o.dx") == 0)).alias("same"),
-    )
-    build = base.select(
-        F.col("k").alias("kb"),
-        F.col("la").alias("la_b"), F.col("lo").alias("lo_b"),
-        win.alias("w"), "cy", "cx",
-    )
-    return (
-        probe.join(build, ["w", "cy", "cx"])
-        .filter(pair_orientation_filter())
-        .withColumn("dist_m", pair_distance())
-        .filter(F.col("dist_m") <= radius_m)
-        .select(
-            "bucket",
-            F.least("ka", "kb").alias("vehicle_a"),
-            F.greatest("ka", "kb").alias("vehicle_b"),
-            "dist_m",
-        )
-    )
+    base = grid_project(
+        with_event_time(pos, watermark), radius_m, bucket_s=bucket_s,
+        extra=("event_time",),
+    ).withColumn("w", F.window("event_time", f"{bucket_s} seconds"))
+    return blocked_pairs(
+        base, id="k", pair=("vehicle_a", "vehicle_b"), keys=("w", "bucket"),
+        near=("cy", "cx"), carry=("la", "lo"),
+        verify=within_radius(radius_m),
+    ).select("bucket", "vehicle_a", "vehicle_b", "dist_m")
 
 
 def stream_ping_pairs(

@@ -111,21 +111,29 @@ def test_threshold_bucket_and_ordering_semantics(spark):
 
 
 def test_plan_merge_join_no_dedup_exchange(spark):
-    """Plan pins: the grid join is a merge join (corpus-scaled sides
-    must never broadcast — the round-7 rule), and the whole query runs
-    in exactly THREE exchanges (two join sides + the pair rollup) —
-    the exactly-once grid needs no de-duplicating exchange."""
+    """Plan pins on the final adaptive plan: the grid join is a merge
+    join (corpus-scaled sides must never broadcast), and the whole query
+    runs in exactly THREE hash exchanges (two join sides + the pair
+    rollup) — the exactly-once grid needs no de-duplicating exchange.
+    One Generate: the probe side's 5-offset half-plane explode."""
     from etl_olho_vivo_spark import registry
+    from tests.planshape import nodes, plan_shape
 
     registry.queries()
     df = registry.REGISTRY["geo_pairs"].fn(
         spark, "/root/testdata/sf0.001"
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan
-    assert "BroadcastHashJoin" not in plan
-    assert plan.count("Exchange hashpartitioning") == 3, plan[:2000]
-    assert plan.count("Generate") == 1  # one 9-cell explode, probe side
+    df.collect()
+    (shape,) = plan_shape(df)
+    assert shape["SortMergeJoinExec"] == 1, shape
+    assert shape["BroadcastHashJoinExec"] == 0, shape
+    hashed = [
+        n for n in nodes(df, "ShuffleExchangeExec")
+        if n.text.startswith("Exchange hashpartitioning")
+    ]
+    assert len(hashed) == 3, hashed
+    assert shape["ReusedExchangeExec"] == 0, shape
+    assert shape["GenerateExec"] == 1, shape
 
 
 def test_null_coordinate_pings_never_pair(spark):

@@ -340,6 +340,7 @@ def test_incremental_pairing_broadcasts_batch_not_store(spark, tmp_path):
     from etl_olho_vivo_spark.operators.dedup import (
         hamming_near_dups_incremental,
     )
+    from tests.planshape import below, walk
 
     store_path = str(tmp_path / "fpstore")
     spark.range(20_000).select(
@@ -364,11 +365,16 @@ def test_incremental_pairing_broadcasts_batch_not_store(spark, tmp_path):
     )
     rows = out.collect()  # finalize the adaptive plan
     assert rows, "expected the planted exact-fp pair to survive"
-    final = out._jdf.queryExecution().executedPlan().toString().split(
-        "== Initial Plan =="
-    )[0]
-    assert "BroadcastHashJoin" in final, final
-    assert "SortMergeJoin" not in final, final
+    listing = walk(out)
+    kinds = [n.kind for n in listing]
+    assert "BroadcastHashJoinExec" in kinds, kinds
+    assert "SortMergeJoinExec" not in kinds, kinds
+    # what ships is the batch (a Range), never the store's parquet scan
+    for i, n in enumerate(listing):
+        if n.kind == "BroadcastExchangeExec":
+            shipped = [m.kind for m in below(listing, i)]
+            assert "RangeExec" in shipped, shipped
+            assert "FileSourceScanExec" not in shipped, shipped
 
 
 @pytest.mark.sweep

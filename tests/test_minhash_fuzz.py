@@ -193,17 +193,59 @@ def _py_simhash(text: str, bits: int) -> int:
     return h
 
 
-@pytest.mark.parametrize("seed,max_hamming", [(21, 3), (22, 2)])
-def test_simhash_near_dups_match_bruteforce(spark, seed, max_hamming):
+@pytest.mark.parametrize(
+    "seed,max_hamming,store",
+    [
+        pytest.param(21, 3, False, id="21-3"),
+        pytest.param(22, 2, False, id="22-2"),
+        pytest.param(23, 3, True, id="store-23-3"),
+    ],
+)
+def test_simhash_near_dups_match_bruteforce(spark, seed, max_hamming, store):
     """The pigeonhole banding (Manku WWW'07) is LOSSLESS for hamming ≤
     n_bands − 1, so the exact expected output is ALL pairs with
     bit_count(xor) ≤ max_hamming — no probabilistic allowance.  A single
     missing pair means the banding construction regressed; a single
-    extra pair means verification regressed."""
+    extra pair means verification regressed.
+
+    ``store``: the incremental leg — a new batch against a fingerprint
+    store, with one store doc replayed under its own id (the
+    ``doc_new != doc_old`` guard) — with and without the pair de-dup."""
     rng = random.Random(seed)
     docs = _gen_corpus(rng, 50)
     bits = dedup.SIMHASH_NEAR_DUP_BITS
     sims = {i: _py_simhash(t, bits) for i, t in docs}
+    schema = "doc_id long, text string"
+    if store:
+        corpus, batch = docs[: len(docs) // 2], docs[len(docs) // 2:]
+        batch = [*batch, corpus[0]]  # replayed write: same id, same text
+        want = {}
+        for a, _ in batch:
+            for b, _ in corpus:
+                d = bin(sims[a] ^ sims[b]).count("1")
+                if a != b and d <= max_hamming:
+                    want[(a, b)] = d
+        assert want, "fixture should plant batch-vs-store near-dups"
+
+        def fps(rows):
+            return dedup.simhash(
+                spark.createDataFrame(rows, schema), bits=bits
+            ).select("doc_id", "simhash")
+
+        for dedup_pairs in (True, False):
+            rows = [
+                ((r["doc_new"], r["doc_old"]), r["hamming"])
+                for r in dedup.hamming_near_dups_incremental(
+                    fps(batch), fps(corpus), hash_col="simhash", bits=bits,
+                    max_hamming=max_hamming, n_bands=4,
+                    dedup_pairs=dedup_pairs,
+                ).collect()
+            ]
+            assert all(want.get(k) == d for k, d in rows), rows
+            assert {k for k, _ in rows} == set(want)
+            if dedup_pairs:
+                assert len(rows) == len(want)
+        return
     want = {}
     ids = sorted(sims)
     for x in range(len(ids)):
@@ -212,7 +254,7 @@ def test_simhash_near_dups_match_bruteforce(spark, seed, max_hamming):
             d = bin(sims[a] ^ sims[b]).count("1")
             if d <= max_hamming:
                 want[(a, b)] = d
-    df = spark.createDataFrame(docs, "doc_id long, text string")
+    df = spark.createDataFrame(docs, schema)
     got = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
         for r in dedup.simhash_near_dups(

@@ -310,69 +310,79 @@ def test_editdist_band_join_is_banded_and_pruned(spark):
     """The length-band escape's three load-bearing plan facts: (1) the
     SMJ keys include the band column (the quadratic split is IN the
     shuffle key, not a post-join filter); (2) the DP is the 3-arg
-    threshold-banded levenshtein (O(len·T), and the |len diff| prune
-    sits beside it in the join condition so non-candidates never touch
-    a DP cell); (3) corpus never broadcast, exchange pinned by number
-    (AQE must not coalesce the compute-bound stage)."""
+    threshold-banded levenshtein (O(len·T)), evaluated once above the
+    join, while the join condition carries only the cheap prunes (pair
+    orientation, |len diff| lower bound) so non-candidates never touch a
+    DP cell; (3) corpus never broadcast, exchange pinned by number (AQE
+    must not coalesce the compute-bound stage)."""
+    from tests.planshape import nodes, plan_shape, walk
+
     df = registry.REGISTRY["doc_editdist_near_dup"].fn(spark, SF)
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "SortMergeJoin" in final, final[:3000]
-    assert "BroadcastHashJoin" not in final
-    assert "REPARTITION_BY_NUM" in final
-    # round-15 shape: the DP is NOT a join predicate — the join carries
-    # only the cheap prunes (pair orientation, |len diff| lower bound),
-    # and levenshtein evaluates exactly ONCE, above the join, inside
-    # the outer-generate pushdown barrier.  The round-14 shape let the
-    # pushed dist>=0 filter fold the DP into the join condition ahead
-    # of gid_a < gid_b: every wrongly-ordered candidate paid the
-    # O(len·T) DP, and survivors paid it twice (condition + project).
-    join_line = next(
-        line
-        for line in final.splitlines()
-        if "SortMergeJoin" in line and "abs(" in line
+    shape = plan_shape(df)[0]
+    assert shape["SortMergeJoinExec"] >= 1, shape
+    assert shape["BroadcastHashJoinExec"] == 0, shape
+    assert any(
+        "REPARTITION_BY_NUM" in n.text
+        for n in nodes(df, "ShuffleExchangeExec")
     )
-    assert "levenshtein" not in join_line, join_line
-    assert "gid_a" in join_line and "gid_b" in join_line, join_line
-    assert "band" in join_line, join_line  # band is a JOIN KEY
-    # one evaluation site, threshold-banded (the formatted details
-    # reprint expressions once per operator listing; count the Generate
-    # input, not raw occurrences)
-    lev_lines = [
-        line for line in final.splitlines() if "levenshtein" in line
+    (band_join,) = [
+        n for n in nodes(df, "SortMergeJoinExec") if "abs(" in n.text
     ]
-    assert lev_lines, final[:3000]
-    assert all("Some(60)" in line for line in lev_lines), lev_lines
-    assert all(
-        "Generate" in line or "Project" in line for line in lev_lines
-    ), lev_lines
+    keys = band_join.text.split("], [", 1)[0]
+    assert "band" in keys, band_join.text  # band is a JOIN KEY
+    assert "levenshtein" not in band_join.text, band_join.text
+    assert "gid_a" in band_join.text and "gid_b" in band_join.text
+    lev = [n for n in walk(df) if "levenshtein" in n.text]
+    assert [n.kind for n in lev] == ["GenerateExec"], lev
+    assert "Some(60)" in lev[0].text, lev
 
 
 def test_trigram_counts_share_one_cached_windows_aggregate(spark):
-    """The order-n single-scan rewrite (round-8 verdict #3): at order
-    >= 3 BOTH the context and n-gram relations must read the SAME
-    persisted (ctx_h, w_h, n) windows aggregate — an InMemoryTableScan
-    over base — instead of each re-running its own corpus windows pass,
-    so the reference corpus is scanned twice total (unigram + windows)
-    rather than three times."""
+    """The order-n single-scan rewrite: at order >= 3 BOTH the context
+    and n-gram relations read the SAME persisted (ctx_h, w_h, n) windows
+    aggregate, and that aggregate — like the unigram pass — reads the
+    SAME cached token frame, so the reference corpus is scanned (and
+    md5-tokenized) once.  Pinned per cache level: each relation scans
+    exactly one cache, and the only FileScan sits inside the token
+    frame."""
     from etl_olho_vivo_spark.caching import CacheBag, release_session_caches
     from etl_olho_vivo_spark.operators import lm
     from etl_olho_vivo_spark.sources.tables import read_table
+    from tests.planshape import walk
 
-    # an earlier registry run may have left ctx/ng cached in the session
-    # bag; Spark's cache manager would then substitute those relations
-    # wholesale and nest their reprints, skewing the textual counts
+    def scans(listing, level):
+        return [
+            n for n in listing if n.level == level
+            and n.kind in ("InMemoryTableScanExec", "FileSourceScanExec")
+        ]
+
+    # an earlier registry run may have left relations cached in the
+    # session bag, which the cache manager would substitute wholesale
     release_session_caches()
     d = read_table(spark, SF, "documents")
     bag = CacheBag()
     try:
-        ctx, ng, _ = lm.ngram_counts(d, order=3, caches=bag)
+        ctx, ng, uni = lm.ngram_counts(d, order=3, caches=bag)
+        windows, tokens = set(), set()
         for df in (ctx, ng):
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            # exactly one cache read and no scan OUTSIDE it (the single
-            # FileScan string is the cached relation's textual reprint)
-            assert plan.count("InMemoryTableScan") == 1, plan[:2000]
-            assert plan.count("FileScan") == 1, plan[:2000]
+            df.collect()
+            listing = walk(df)
+            (agg,) = scans(listing, 0)
+            (tok,) = scans(listing, 1)
+            (scan,) = scans(listing, 2)
+            assert agg.kind == tok.kind == "InMemoryTableScanExec"
+            assert scan.kind == "FileSourceScanExec"
+            assert not scans(listing, 3)
+            windows.add(agg.cache)
+            tokens.add(tok.cache)
+        uni.collect()
+        listing = walk(uni)
+        (tok,) = scans(listing, 0)
+        (scan,) = scans(listing, 1)
+        assert scan.kind == "FileSourceScanExec"
+        tokens.add(tok.cache)
+        assert len(windows) == 1 and len(tokens) == 1
+        assert windows != tokens
     finally:
         bag.release()
